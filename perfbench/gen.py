@@ -19,10 +19,11 @@ Shape of the stream it writes (the reference's chain-fetch shape):
 The manifest records the expected number of distinct deal keys, computed here
 from the generated events (not from the program's output).
 
-    python3 perfbench/gen.py --selftest [--seed N]
+    python3 perfbench/gen.py [--seed N]
 
-checks that one seed yields byte-identical slices and that the recorded
-distinct-key count matches an independent DuckDB count over the slices.
+is the generator's self-test: it checks that one seed yields byte-identical
+slices and that the recorded distinct-key count matches an independent DuckDB
+count over the slices.
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ EPOCH_SPAN = 2_000
 GENESIS_UNIX = 1_598_306_400
 EPOCH_SECONDS = 30
 
-N_SLICES = 3
+N_SLICES = 5
 EVENTS_PER_SLICE = 4_000
 EPOCHS_PER_SLICE = 150  # 1.5 sink partitions (epoch buckets of 100) per slice
 REDELIVER_FRAC = 0.05
@@ -213,18 +214,11 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(here))
     from spark_deal_observer_spark.sources.tables import DEFAULT_SF_DIR
 
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap = argparse.ArgumentParser(description="self-test of the deal_stream generator")
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--out", default=None, help="write slices here instead of self-testing")
-    ap.add_argument("--selftest", action="store_true")
     args = ap.parse_args()
     events_path = os.path.join(DEFAULT_SF_DIR, "events.parquet")
-    if args.selftest:
-        selftest(args.seed, events_path, os.path.join(here, ".work"))
-    elif args.out:
-        print(json.dumps(generate(args.seed, events_path, args.out), indent=1))
-    else:
-        ap.error("give --selftest or --out DIR")
+    selftest(args.seed, events_path, os.path.join(here, ".work"))
 
 
 if __name__ == "__main__":

@@ -1,9 +1,10 @@
 """The benchmark workloads. Each is a closed loop driven by one client thread:
 the next call into the package starts when the previous one returns.
 
-A workload has a `prep` step (set-up: input, first executions) and a
-`run_pass` step (one pass over its fixed work). Calls into the package are
-timed and recorded through `Bench.op`; output checks run outside those calls.
+A workload has a `prep` step (set-up: input, first executions), a `run_pass`
+step (one pass over its fixed work) and a `check_pass` step (that pass's
+output checks). Calls into the package are timed and recorded through
+`Bench.op`; `check_pass` runs after the pass's timed and CPU windows.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from pyspark.sql import functions as F
 import gen
 from layers import median, percentile_tail
 
+from spark_deal_observer_spark import benchkit
 from spark_deal_observer_spark.operators import models
 from spark_deal_observer_spark.operators.merge import DEAL_KEY
 from spark_deal_observer_spark.operators.state import RESOLVED, resolve_tick, work_queue
@@ -75,72 +77,90 @@ def _table_sql(table: str, sql: str) -> tuple:
 
 
 # ---------------------------------------------------------------------------
-# deal_stream: ingest -> (enrich, egress) rounds on one partitioned table
+# deal_stream: ingest -> enrich -> egress on one partitioned table
 # ---------------------------------------------------------------------------
 
 class DealStream:
-    """Ingest micro-batches, then enrichment and egress ticks, on one
-    partitioned deal table; checks the table's invariants after each pass.
-    The pass includes the loops' first executions in the JVM: a separate
-    warm-up pass does not fit the run budget."""
+    """Ingest micro-batches, then one enrichment tick and one egress tick, on
+    one partitioned deal table; the table's invariants are checked after the
+    pass."""
 
     name = "deal_stream"
-    ROUNDS = 1
-    # the enrichment clock starts, and advances per round, by more than the
-    # 3-day retry backoff, so every round retries earlier failed attempts
-    CLOCK_STEP_DAYS = 4
+    # the enrichment clock stands past the 3-day retry backoff, so the tick
+    # retries the corpus's earlier failed attempts
+    CLOCK = str(datetime.datetime.fromisoformat(REF_TS) + datetime.timedelta(days=4))
     MAX_DEALS = 1000
+    # the warm-up pass's slices: the first meets an empty table and the
+    # second an existing one, the two append paths of a measured pass
+    WARMUP_SLICES = 2
 
     def __init__(self, bench):
         self.b = bench
         self.gen_dir = os.path.join(bench.work, "gen")
+        self.source = os.path.join(bench.work, "source")
         self.manifest: dict = {}
         self.layer: dict[str, list[float]] = {}
+        self._unchecked: dict = {}  # pass -> (pass dir, submitted count)
 
     def _add(self, key: str, value: float) -> None:
         self.layer.setdefault(key, []).append(value)
 
-    def prep(self) -> None:
-        events = os.path.join(self.b.events_dir, "events.parquet")
-        self.manifest = gen.generate(self.b.seed, events, self.gen_dir)
-
-    def run_pass(self, p: int) -> float:
-        return self._pass(f"pass{p}")
-
-    def _pass(self, name: str) -> float:
-        b, spark = self.b, self.b.spark
-        n_slices = self.manifest["n_slices"]
-        d = os.path.join(b.work, name)
-        shutil.rmtree(d, ignore_errors=True)
-        source, table, ckpt = (os.path.join(d, x) for x in ("source", "table", "ckpt"))
+    def _stage(self, source: str, n_slices: int) -> None:
+        """Copy the first slices into a stream source directory. The file
+        source reads in modification-time order, and only reads, so every
+        pass can share one directory."""
         os.makedirs(source)
         t0 = time.time() - n_slices
         for k in range(n_slices):
             fname = f"slice_{k:04d}.parquet"
             dst = os.path.join(source, fname)
             shutil.copyfile(os.path.join(self.gen_dir, fname), dst)
-            os.utime(dst, (t0 + k, t0 + k))  # the file source reads in mtime order
+            os.utime(dst, (t0 + k, t0 + k))
+
+    def prep(self) -> None:
+        """Generate and stage the input, then run a warm-up pass over the
+        first slices, so that the loops' first executions in the JVM (class
+        loading, JIT and code generation) happen in set-up, as catalog_serve's
+        do. The warm-up's figures are dropped and its table is not checked."""
+        events = os.path.join(self.b.events_dir, "events.parquet")
+        self.manifest = gen.generate(self.b.seed, events, self.gen_dir)
+        self._stage(self.source, self.manifest["n_slices"])
+        warm = os.path.join(self.b.work, "warmup-source")
+        self._stage(warm, self.WARMUP_SLICES)
+        self.run_pass("warmup", warm)
+        shutil.rmtree(self._unchecked.pop("warmup")[0], ignore_errors=True)
+        self.layer.clear()
+
+    def run_pass(self, p, source: str | None = None) -> float:
+        b, spark = self.b, self.b.spark
+        source = source or self.source
+        n_slices = len(os.listdir(source))
+        d = os.path.join(b.work, f"pass{p}")
+        table, ckpt = os.path.join(d, "table"), os.path.join(d, "ckpt")
 
         # -- ingest: drain the slices, one file per micro-batch --------------
         stage = b.tracer.open("stage", "ingest")
+        before = benchkit.cpu_snapshot()
         q = start_ingest(spark, source, table, ckpt, available_now=True,
                          max_files_per_trigger=1)
         q.awaitTermination(150)
         drain_s = b.tracer.close(stage)
+        foreign = benchkit.foreign_between(before, benchkit.cpu_snapshot())
+        dirty = b.contaminated(foreign, drain_s)
         error = q.exception()
         if q.isActive:
             q.stop()
         progress = list(q.recentProgress)
         data_batches = [pr for pr in progress if pr.numInputRows > 0]
-        for pr in progress:
+        for pr in progress:  # the drain's foreign CPU is shared out per batch
             b.record_op("batch", f"batch{pr.batchId}",
-                        pr.durationMs.get("triggerExecution", 0) / 1e3, failed=False)
+                        pr.durationMs.get("triggerExecution", 0) / 1e3, failed=False,
+                        foreign=foreign / max(len(progress), 1), dirty=dirty)
         missing = n_slices - len(data_batches) if error is None else n_slices
         for _ in range(max(missing, 0)):
             b.record_op("batch", "missing", 0.0, failed=True)
         if error is not None:
             b.note(f"ingest failed: {error}")
-        pass_s = drain_s
         self._add("ingest.events_per_s",
                   sum(pr.numInputRows for pr in data_batches) / drain_s)
         batch_s = [pr.durationMs.get("triggerExecution", 0) / 1e3 for pr in progress]
@@ -148,32 +168,11 @@ class DealStream:
         if b.trace:
             self._trace_ingest(stage, q, progress, table, ckpt, n_slices)
 
+        # -- one enrichment tick, then one egress tick, on the same table -----
         sink = PartitionedDealTableSink(spark, table)
-
-        # -- rounds of enrichment + egress over the same table ----------------
         peers = spark.read.parquet(os.path.join(self.gen_dir, "miner_peers.parquet"))
         pays = spark.read.parquet(os.path.join(self.gen_dir, "payload_cids.parquet"))
-        submitted, clocks = 0, []
-        for r in range(self.ROUNDS):
-            clock = str(datetime.datetime.fromisoformat(REF_TS)
-                        + datetime.timedelta(days=(r + 1) * self.CLOCK_STEP_DAYS))
-            clocks.append(clock)
-            n, tick_s = self._round(sink, peers, pays, clock)
-            submitted += n
-            pass_s += tick_s
-        self._check(table, clocks, submitted)
-        shutil.rmtree(d, ignore_errors=True)
-        return pass_s
-
-    def local1_baseline(self) -> float:
-        """One pass on a single-core session: the single-threaded baseline."""
-        os.environ["SPARK_GRAFT_CPUS"] = "1"
-        self.b.start_session()
-        return self._pass("local1")
-
-    def _round(self, sink, peers, pays, clock: str) -> tuple[int, float]:
-        b = self.b
-        now = F.expr(f"TIMESTAMP_NTZ '{clock}'")
+        now = F.expr(f"TIMESTAMP_NTZ '{self.CLOCK}'")
         before = _files(sink.path) if b.trace else {}
         queue = work_queue(sink.read(), now, self.MAX_DEALS).count() if b.trace else 0
 
@@ -184,14 +183,15 @@ class DealStream:
             )
 
         span = b.op("enrich", "enrich_tick", enrich)
-        tick_s = span.attrs["wall_s"]
-        self._add("enrich.tick_s", tick_s)
+        enrich_s = span.attrs["wall_s"]
+        self._add("enrich.tick_s", enrich_s)
         if b.trace:
             after = _files(sink.path)
             attempted, resolved = _table_sql(
                 sink.path,
                 f"SELECT COUNT(*), COUNT(*) FILTER (WHERE payload_retrievability_state = "
-                f"'{RESOLVED}') FROM t WHERE last_payload_retrieval_attempt = TIMESTAMP '{clock}'",
+                f"'{RESOLVED}') FROM t "
+                f"WHERE last_payload_retrieval_attempt = TIMESTAMP '{self.CLOCK}'",
             )
             self._add("state.queue_rows", queue)
             self._add("state.resolved_ratio", resolved / attempted if attempted else 0.0)
@@ -208,26 +208,27 @@ class DealStream:
 
         before = _files(sink.path) if b.trace else {}
         span = b.op("egress", "egress_tick", lambda: submit_eligible(sink, poster, now=now))
-        tick_s += span.attrs["wall_s"]
-        self._add("egress.tick_s", span.attrs["wall_s"])
+        egress_s = span.attrs["wall_s"]
+        self._add("egress.tick_s", egress_s)
         res = span.attrs.get("result") or {"submitted": 0}
         if b.trace:
             self._add("egress.submitted", res["submitted"])
             self._add("egress.post_s", posted["s"])
             self._add("egress.rewritten_bytes", _new_bytes(before, _files(sink.path)))
             self._add("egress.jobs_per_tick", span.attrs.get("jobs", 0))
-        return res["submitted"], tick_s
+        self._unchecked[p] = (d, res["submitted"])
+        return drain_s + enrich_s + egress_s
 
-    def _check(self, table: str, clocks: list[str], submitted: int) -> None:
+    def check_pass(self, p) -> None:
         """The end-to-end invariants, read by DuckDB from the table files after
-        the rounds: the table holds exactly the generator's distinct keys, each
+        the pass: the table holds exactly the generator's distinct keys, each
         once (so ingest lost nothing and enrichment added or dropped no row);
         egress counted exactly the rows it flagged, and flagged only resolved
-        deals."""
-        flagged = "submitted_at IN ({})".format(
-            ", ".join(f"TIMESTAMP '{c}'" for c in clocks))
+        deals. The pass's files are removed afterwards."""
+        d, submitted = self._unchecked.pop(p)
+        flagged = f"submitted_at = TIMESTAMP '{self.CLOCK}'"
         rows, keys, n_flagged, unresolved = _table_sql(
-            table,
+            os.path.join(d, "table"),
             f"SELECT COUNT(*), COUNT(DISTINCT ({', '.join(DEAL_KEY)})), "
             f"COUNT(*) FILTER (WHERE {flagged}), "
             f"COUNT(*) FILTER (WHERE {flagged} AND payload_cid IS NULL) FROM t",
@@ -238,6 +239,15 @@ class DealStream:
         self.b.check(n_flagged == submitted,
                      f"egress counted {submitted} submissions, table flags {n_flagged}")
         self.b.check(unresolved == 0, f"{unresolved} submitted deals unresolved")
+        shutil.rmtree(d, ignore_errors=True)
+
+    def local1_baseline(self) -> float:
+        """One pass on a single-core session: the single-threaded baseline."""
+        os.environ["SPARK_GRAFT_CPUS"] = "1"
+        self.b.start_session()
+        wall = self.run_pass("local1")
+        self.check_pass("local1")
+        return wall
 
     def _trace_ingest(self, stage, q, progress, table: str, ckpt: str, n_slices: int) -> None:
         b = self.b
@@ -286,30 +296,21 @@ class DealStream:
 # catalog_serve: a corpus snapshot is published, then the catalog is served
 # ---------------------------------------------------------------------------
 
-def _check_query(bench, name: str) -> None:
-    """Execute a query and check its rows: against its DuckDB twin where it
-    has one, else for being non-empty."""
-    qd = REGISTRY[name]
-    bench.spark.sparkContext.setJobGroup("perfbench-setup", name)
-    if qd.oracle is not None:
-        ok, msg = compare_query(bench.spark, bench.catalog_dir, qd.fn, qd.oracle)
-        bench.check(ok, f"{name}: {msg}")
-    else:
-        n = qd.fn(bench.spark, bench.catalog_dir).limit(1).count()
-        bench.check(n > 0, f"{name}: no rows")
-
-
 class CatalogServe:
     """Each pass starts from an empty model store. The PUBLISHED queries
-    train and publish their artifacts (cold); then ROUNDS rounds serve the
-    SERVED queries and read the published artifacts (warm), each round in an
-    order drawn from the seed. Outputs are checked at each query's first
-    execution, in set-up."""
+    train and publish their artifacts (cold); then the SERVED queries run and
+    the published artifacts are read (warm), in an order drawn from the seed.
+    Every query's first execution happens in set-up; every query's rows are
+    checked after each pass."""
 
     name = "catalog_serve"
-    ROUNDS = 4
-    # bench.py HEADLINE queries that publish no model artifact
-    SERVED = ("eligible_deals", "dedup_insert", "agg_revenue_by_nation")
+    # A stratified sample of the 54 bench.py HEADLINE queries that publish no
+    # model artifact: the queries are cut into five strata by Spark job count
+    # (1-2, 3-5, 6-9, 10-19, 20+ jobs per call) and the query with the
+    # stratum's median warm time is taken from each. The readings behind it
+    # are catalog_sizing.json; README.md gives the rule's coverage.
+    SERVED = ("window_top_order_per_cust", "interval_range_join", "dedup_lines",
+              "hll_set_ops_audit", "event_analytics_suite")
     # an artifact-publishing query whose cold path is a driver-bound index build
     PUBLISHED = ("ann_sq8",)
 
@@ -321,31 +322,48 @@ class CatalogServe:
         self.layer.setdefault(key, []).append(value)
 
     def prep(self) -> None:
-        register_views(self.b.spark, self.b.catalog_dir)
+        b = self.b
+        register_views(b.spark, b.catalog_dir)
         for q in self.SERVED + self.PUBLISHED:
-            _check_query(self.b, q)
+            fn = REGISTRY[q].fn
+            b.op("first", q, lambda fn=fn: benchkit.time_noop(b.spark, fn, b.catalog_dir))
+
+    def check_pass(self, _p) -> None:
+        """Check every query's rows, the published ones read from the artifact
+        the pass published: against the DuckDB twin where the query has one,
+        else for being non-empty."""
+        b = self.b
+        for name in self.SERVED + self.PUBLISHED:
+            qd = REGISTRY[name]
+            b.spark.sparkContext.setJobGroup("perfbench-check", name)
+            try:
+                if qd.oracle is not None:
+                    ok, msg = compare_query(b.spark, b.catalog_dir, qd.fn, qd.oracle)
+                else:
+                    ok, msg = qd.fn(b.spark, b.catalog_dir).limit(1).count() > 0, "no rows"
+            except Exception as e:
+                ok, msg = False, repr(e)
+            b.check(ok, f"{name}: {msg}")
 
     def run_pass(self, p: int) -> float:
         b = self.b
-        rng = random.Random(b.seed * 1000 + p)
         models.clear()
         cold = [b.query(q).attrs for q in self.PUBLISHED]
         if b.trace:
             self._add("models.artifacts", len(models._STORE))
+        order = list(self.SERVED + self.PUBLISHED)
+        random.Random(b.seed * 1000 + p).shuffle(order)
         served, warm = [], []
-        for _ in range(self.ROUNDS):
-            order = list(self.SERVED + self.PUBLISHED)
-            rng.shuffle(order)
-            for q in order:
-                (warm if q in self.PUBLISHED else served).append(b.query(q).attrs)
+        for q in order:
+            (warm if q in self.PUBLISHED else served).append(b.query(q).attrs)
         walls = [c["wall_s"] for c in served]
         self._add("serve.pass_s", sum(walls))
         self.layer.setdefault("serve.query_s", []).extend(walls)
         self._add("publish.cold_s", sum(c["wall_s"] for c in cold))
-        self._add("publish.warm_s", sum(c["wall_s"] for c in warm) / self.ROUNDS)
+        self._add("publish.warm_s", sum(c["wall_s"] for c in warm))
         if b.trace:
             self._add("models.cold_jobs", sum(c["jobs"] for c in cold))
-            self._add("models.warm_jobs", sum(c["jobs"] for c in warm) / self.ROUNDS)
+            self._add("models.warm_jobs", sum(c["jobs"] for c in warm))
         return sum(c["wall_s"] for c in cold + served + warm)
 
     def summary(self) -> dict[str, float]:
